@@ -40,6 +40,12 @@ object ReaderSession {
       // (satbucket/checks.py:40-89) — not as TIMESTAMP_NTZ, which breaks
       // unix_micros and typed Timestamp consumers downstream.
       ns.conf.set("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
+      // A bucket read hands Spark its selected cell directories — hundreds
+      // for a hemisphere. Above this threshold Spark lists them with a
+      // Spark job of one task per directory, which costs more than the
+      // listing itself; the driver lists them in one pass instead.
+      ns.conf.set("spark.sql.sources.parallelPartitionDiscovery.threshold",
+        Int.MaxValue.toString)
       cache.put(spark, ns)
     }
     ns

@@ -8,9 +8,6 @@ final case class Extent(xmin: Double, xmax: Double, ymin: Double, ymax: Double) 
   require(xmin < xmax, s"xmin must be < xmax: $this")
   require(ymin < ymax, s"ymin must be < ymax: $this")
   def asSeq: Seq[Double] = Seq(xmin, xmax, ymin, ymax)
-  def clampTo(other: Extent): Extent = Extent(
-    math.max(xmin, other.xmin), math.min(xmax, other.xmax),
-    math.max(ymin, other.ymin), math.min(ymax, other.ymax))
 }
 
 object Extent {
@@ -114,8 +111,9 @@ object Binning {
   * arrays) exposing executor-side Column builders; the Spark analogue of
   * the reference's Base2DPartitioning (satbucket/partitioning.py:366-823).
   *
-  * `flavor`: "hive" → `level=label/` directory names (Spark-native
-  * partitionBy layout); null/"directory" → bare `label/` names.
+  * `flavor`: "directory" → bare `label/` directory names; "hive" or
+  * unset → `level=label/` names (the Spark-native partitionBy layout the
+  * writer produces).
   */
 sealed trait Partitioning2D extends Serializable {
   def extent: Extent
@@ -243,31 +241,22 @@ sealed trait Partitioning2D extends Serializable {
 
   /** (x indices, y indices) of partitions intersecting `queryExtent`
     * (reference get_partitions_by_extent, :599-620: clamp the extent, map
-    * its corners to centroids, take every centroid in that closed range). */
+    * its corners to bins, take every bin in that closed range). A query
+    * outside the partitioning's extent selects no partitions. */
   def partitionIndicesByExtent(queryExtent: Extent): (Array[Int], Array[Int]) = {
-    val q = queryExtent.clampTo(extent)
-    val cxMin = xCentroids(Binning.indexOf(q.xmin, xBounds, extent.xmin, extent.xmax, xSize))
-    val cxMax = xCentroids(Binning.indexOf(q.xmax, xBounds, extent.xmin, extent.xmax, xSize))
-    val cyMin = yCentroids(Binning.indexOf(q.ymin, yBounds, extent.ymin, extent.ymax, ySize))
-    val cyMax = yCentroids(Binning.indexOf(q.ymax, yBounds, extent.ymin, extent.ymax, ySize))
-    val xs = xCentroids.indices.filter(i => xCentroids(i) >= cxMin && xCentroids(i) <= cxMax)
-    val ys = yCentroids.indices.filter(j => yCentroids(j) >= cyMin && yCentroids(j) <= cyMax)
-    (xs.toArray, ys.toArray)
+    def axis(lo: Double, hi: Double, vmin: Double, vmax: Double,
+             bounds: Array[Double], size: Double): Array[Int] =
+      if (hi < vmin || lo > vmax) Array.empty
+      else (Binning.indexOf(math.max(lo, vmin), bounds, vmin, vmax, size) to
+        Binning.indexOf(math.min(hi, vmax), bounds, vmin, vmax, size)).toArray
+    (axis(queryExtent.xmin, queryExtent.xmax, extent.xmin, extent.xmax, xBounds, xSize),
+      axis(queryExtent.ymin, queryExtent.ymax, extent.ymin, extent.ymax, yBounds, ySize))
   }
 
   /** level → distinct labels intersecting the extent. For 2-level schemes
     * this is the per-axis label sets whose cross-product covers the query;
     * for 1-level tile ids it is the exact id list. */
   def partitionsByExtent(queryExtent: Extent): Map[String, Seq[String]]
-
-  /** Catalyst pruning predicate over the partition label columns: Catalyst
-    * turns `level.isin(labels)` into directory-level partition pruning. */
-  def prunePredicate(queryExtent: Extent): Column = {
-    val dict = partitionsByExtent(queryExtent)
-    dict.map { case (level, labels) =>
-      col(level).isin(labels: _*)
-    }.reduce(_ && _)
-  }
 
   /** Directory trees (relative) for the labels dict, obeying order+flavor
     * (reference _directories / get_directories, :253-272). */
@@ -305,27 +294,6 @@ sealed trait Partitioning2D extends Serializable {
     } yield (i, j)
   }
 
-  /** Catalyst pruning predicate selecting EXACTLY the given cells — unlike
-    * [[prunePredicate]]'s per-axis `isin` cross-product, non-rectangular
-    * cell sets (polygon queries) stay non-rectangular. Grouped by
-    * first-level label so the predicate is O(distinct x-labels) OR terms,
-    * each with one `isin`; Catalyst evaluates it against partition-column
-    * values only, so directory pruning still applies. */
-  def prunePredicateForCells(cells: Seq[(Int, Int)]): Column = {
-    require(cells.nonEmpty, "no partitions intersect the query polygon")
-    if (nLevels == 1) {
-      val labs = cells.map { case (i, j) => labelsOfIndices(i, j).head }.distinct
-      col(levels.head).isin(labs: _*)
-    } else {
-      cells.map { case (i, j) => labelsOfIndices(i, j) match {
-        case Seq(xl, yl) => (xl, yl)
-        case other => throw new IllegalStateException(s"expected 2 labels, got $other")
-      }}.groupBy(_._1).toSeq.sortBy(_._1).map { case (xl, pairs) =>
-        col(levels(0)) === xl && col(levels(1)).isin(pairs.map(_._2).distinct: _*)
-      }.reduce(_ || _)
-    }
-  }
-
   /** Directory trees (relative) for an explicit cell list. */
   def directoriesForCells(cells: Seq[(Int, Int)]): Seq[String] =
     cells.map { case (i, j) => directoryOf(i, j) }
@@ -334,7 +302,7 @@ sealed trait Partitioning2D extends Serializable {
     val byLevel = levels.zip(labelsOfIndices(i, j)).toMap
     order.map { lvl =>
       val lab = byLevel(lvl)
-      if (flavor.contains("hive")) s"$lvl=$lab" else lab
+      if (flavor.contains("directory")) lab else s"$lvl=$lab"
     }.mkString("/")
   }
 
@@ -693,21 +661,37 @@ object TilePartitioning {
 object GeoExtent {
   private val EarthRadiusM = 6371008.8
 
+  /** Box around a point, clamped to ±180°/±90°: a `sizeDeg`-wide square,
+    * or the first of [[circleBoxes]] for a `distance` in meters. */
   def aroundPoint(lon: Double, lat: Double,
                   distance: Double = Double.NaN,
                   sizeDeg: Double = Double.NaN): Extent = {
-    if (!distance.isNaN) {
-      val dLat = math.toDegrees(distance / EarthRadiusM) * 1.02
-      val cosLat = math.max(math.cos(math.toRadians(lat)), 1e-9)
-      val dLon = math.min(math.toDegrees(distance / (EarthRadiusM * cosLat)) * 1.02, 360.0)
-      Extent(
-        math.max(lon - dLon, -180), math.min(lon + dLon, 180),
-        math.max(lat - dLat, -90), math.min(lat + dLat, 90))
-    } else {
+    if (!distance.isNaN) circleBoxes(lon, lat, distance).head
+    else {
       require(!sizeDeg.isNaN, "provide distance (m) or sizeDeg (degrees)")
       Extent(
         math.max(lon - sizeDeg / 2, -180), math.min(lon + sizeDeg / 2, 180),
         math.max(lat - sizeDeg / 2, -90), math.min(lat + sizeDeg / 2, 90))
+    }
+  }
+
+  /** Boxes covering every point within `distance` meters of (lon, lat):
+    * the box clamped at ±180°, plus the part that wraps across the
+    * antimeridian, or one full-longitude band when the circle holds a
+    * pole. The spherical cap's angular radius is inflated 2% to cover the
+    * ellipsoid; its longitude reach asin(sin r / cos lat) is exact for
+    * the cap. */
+  def circleBoxes(lon: Double, lat: Double, distance: Double): Seq[Extent] = {
+    val r = distance / EarthRadiusM * 1.02
+    val dLat = math.toDegrees(r)
+    val (ymin, ymax) = (math.max(lat - dLat, -90), math.min(lat + dLat, 90))
+    if (r >= math.toRadians(90 - math.abs(lat))) Seq(Extent(-180, 180, ymin, ymax))
+    else {
+      val dLon = math.toDegrees(math.asin(math.sin(r) / math.cos(math.toRadians(lat))))
+      val (x0, x1) = (lon - dLon, lon + dLon)
+      Extent(math.max(x0, -180), math.min(x1, 180), ymin, ymax) +:
+        (Option.when(x0 < -180)(Extent(x0 + 360, 180, ymin, ymax)) ++
+          Option.when(x1 > 180)(Extent(-180, x1 - 360, ymin, ymax))).toSeq
     }
   }
 }

@@ -1,23 +1,27 @@
 package graft.sources
 
 import java.nio.file.{FileSystems, Paths}
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.partitioning.{Extent, GeoExtent, LonLatPartitioning, Partitioning2D}
+import graft.partitioning.{Extent, GeoExtent, Partitioning2D}
 import graft.geo.NamedExtents
 import graft.operators.SpatialFilters
 
 /** The read query path (reference read_bucket / satbucket.read,
-  * satbucket/readers.py:162-303).
+  * satbucket/readers.py:162-303): extent → labels → only those
+  * directories listed and scanned.
   *
-  * One Catalyst plan does everything the reference stages by hand:
-  * manifest → label-predicate partition pruning (directory-level, via
-  * `PartitioningAwareFileIndex`) → vectorized parquet scan with projection
-  * + predicate pushdown → spatial refinement → optional limit.
-  *
-  * Directory-flavor buckets (bare `label/` dirs) have no hive metadata, so
-  * pruning happens driver-side (explicit pruned paths) and the label
-  * columns are reconstructed from the file path segments.
+  * One selection path serves every flavor and query kind. The
+  * partitioning names the candidate cell directories (a box's cells, or a
+  * polygon's exact cell set), [[BucketFs.filterExisting]] keeps those on
+  * disk, and Spark is handed only them — or their files when a filename
+  * filter is set; `Everything` hands it the bucket root. The flavor
+  * decides only how the label columns appear: hive labels come from
+  * partition discovery under `basePath = bucketDir`, directory-flavor
+  * labels from the file path segments. The vectorized parquet scan then
+  * gets projection and predicate pushdown, followed by the exact row
+  * refinement and an optional limit.
   */
 object BucketReader {
 
@@ -27,7 +31,9 @@ object BucketReader {
   final case class ByCountry(name: String, padding: Double = 0.0) extends SpatialQuery
   final case class ByContinent(name: String, padding: Double = 0.0) extends SpatialQuery
   /** Geodesic radius (meters) or a sizeDeg-wide box around a point; appends
-    * a `distance` column like the reference (readers.py:147-148). */
+    * a `distance` column like the reference (readers.py:147-148). A radius
+    * circle's cells wrap across ±180° and span every longitude when the
+    * circle holds a pole ([[GeoExtent.circleBoxes]]). */
   final case class AroundPoint(lon: Double, lat: Double,
                                distance: Double = Double.NaN,
                                sizeDeg: Double = Double.NaN) extends SpatialQuery
@@ -39,6 +45,8 @@ object BucketReader {
   final case class ByPolygon(vertices: Seq[(Double, Double)],
                              padding: Double = 0.0) extends SpatialQuery
 
+  /** Rows of `bucketDir` matching the query. A query whose cells hold no
+    * data reads as no rows with the bucket's schema. */
   def read(spark: SparkSession, bucketDir: String,
            query: SpatialQuery = Everything,
            columns: Seq[String] = Nil,
@@ -50,7 +58,6 @@ object BucketReader {
            x: String = "lon", y: String = "lat",
            timeColumns: Seq[String] = Seq("time")): DataFrame = {
     val p = BucketInfo.readPartitioning(bucketDir)
-    val isHive = !p.flavor.contains("directory")
 
     // Partition-label strings must come back as strings (no hive partition
     // value type inference), and reference buckets written by pandas/pyarrow
@@ -59,65 +66,41 @@ object BucketReader {
     // the caller's session conf is untouched by this read.
     val rs = graft.core.ReaderSession(spark)
 
-    val resolvedExtent: Option[Extent] = query match {
-      case Everything | ByPolygon(_, _) => None
-      case ByExtent(e, pad) => Some(pad2(e, pad))
-      case ByCountry(n, pad) => Some(NamedExtents.country(n, pad))
-      case ByContinent(n, pad) => Some(NamedExtents.continent(n, pad))
-      case AroundPoint(lon, lat, d, s) => Some(GeoExtent.aroundPoint(lon, lat, d, s))
-    }
-    // polygons prune per-cell (rect/polygon intersection), not by bbox —
-    // a concave query skips the bbox cells it never touches
-    val polyCells: Option[Seq[(Int, Int)]] = query match {
+    // the candidate cell directories (None: the whole bucket) and the
+    // exact row filter
+    def byBox(box: Extent): (Option[Seq[String]], DataFrame => DataFrame) =
+      (Some(p.directoriesByExtent(box)), SpatialFilters.filterByExtent(_, box, x, y))
+    val (candidates, refine): (Option[Seq[String]], DataFrame => DataFrame) = query match {
+      case Everything => (None, identity)
+      case ByExtent(e, pad) => byBox(pad2(e, pad))
+      case ByCountry(n, pad) => byBox(NamedExtents.country(n, pad))
+      case ByContinent(n, pad) => byBox(NamedExtents.continent(n, pad))
+      case AroundPoint(lon, lat, d, _) if !d.isNaN =>
+        (Some(GeoExtent.circleBoxes(lon, lat, d).flatMap(p.directoriesByExtent)),
+          SpatialFilters.filterAroundPoint(spark, _, lon, lat, d, x, y))
+      case AroundPoint(lon, lat, _, s) => byBox(GeoExtent.aroundPoint(lon, lat, sizeDeg = s))
       case ByPolygon(vs, pad) =>
-        require(vs.length >= 3, "ByPolygon needs >= 3 vertices")
-        Some(p.partitionIndicesByPolygon(vs, pad))
-      case _ => None
+        (Some(p.directoriesForCells(p.partitionIndicesByPolygon(vs, pad))),
+          SpatialFilters.filterByPolygon(_, vs, x, y))
     }
-
-    val hasNameFilter = fileExtension != null || globPattern != null || regexPattern != null
+    // parallel exists() — candidates number in the hundreds and sequential
+    // RPCs dominate on remote stores
+    val roots = candidates.fold(Seq(bucketDir))(rel =>
+      BucketFs.filterExisting(rel.map(r => s"$bucketDir/$r")))
+    val dataExt = Option(fileExtension).getOrElse(".parquet")
+    val byName = fileExtension != null || globPattern != null || regexPattern != null
+    val inputs =
+      if (byName) roots.flatMap(listFiles(_, dataExt, globPattern, regexPattern))
+      else roots
 
     var df =
-      if (isHive && !hasNameFilter) {
-        // hive flavor: Catalyst prunes dirs from the label predicate.
-        // pathGlobFilter keeps non-parquet bucket files (e.g. the
-        // reference's bucket_info.yaml) out of the scan.
-        var d = rs.read.option("pathGlobFilter", "*.parquet").parquet(bucketDir)
-        resolvedExtent.foreach(e => d = d.where(p.prunePredicate(e)))
-        polyCells.foreach(c => d = d.where(p.prunePredicateForCells(c)))
-        d
-      } else if (isHive) {
-        // explicit file list (P11 filename filters) + basePath keeps the
-        // hive partition columns resolvable
-        val files = listFiles(bucketDir, fileExtension, globPattern, regexPattern)
-        require(files.nonEmpty, s"no files match the filename filters in $bucketDir")
-        var d = rs.read.option("basePath", bucketDir).parquet(files: _*)
-        resolvedExtent.foreach(e => d = d.where(p.prunePredicate(e)))
-        polyCells.foreach(c => d = d.where(p.prunePredicateForCells(c)))
-        d
-      } else {
-        // directory flavor: prune driver-side, rebuild labels from the path
-        val roots = (resolvedExtent, polyCells) match {
-          case (Some(e), _) =>
-            // parallel exists() — pruned candidates number in the hundreds
-            // and sequential RPCs dominate on remote stores
-            BucketFs.filterExisting(
-              p.directoriesByExtent(e).map(rel => s"$bucketDir/$rel"))
-          case (_, Some(cells)) =>
-            BucketFs.filterExisting(
-              p.directoriesForCells(cells).map(rel => s"$bucketDir/$rel"))
-          case _ => Seq(bucketDir)
-        }
-        require(roots.nonEmpty, "no partitions intersect the query extent")
-        val dataExt = if (fileExtension == null) ".parquet" else fileExtension
-        val all = roots.flatMap(r => listFiles(r, dataExt, globPattern, regexPattern))
-        require(all.nonEmpty, s"no files to read in $bucketDir")
-        val d = rs.read.parquet(all: _*)
-        val parts = split(input_file_name(), "/")
-        val n = p.order.length
-        p.order.zipWithIndex.foldLeft(d) { case (acc, (level, i)) =>
-          acc.withColumn(level, element_at(parts, -(n - i + 1)))
-        }
+      if (inputs.nonEmpty) scan(rs, p, bucketDir, inputs, files = byName)
+      else {
+        require(query != Everything, s"no files match the filename filters in $bucketDir")
+        // nothing selected: no rows, with the schema of one data file
+        val one = firstFile(bucketDir, dataExt).getOrElse(
+          throw new IllegalArgumentException(s"no data files in $bucketDir"))
+        scan(rs, p, bucketDir, Seq(one), files = true).where(lit(false))
       }
 
     // nanos→timestamp conversion for declared time columns (see above)
@@ -128,22 +111,7 @@ object BucketReader {
       }
     }
 
-    // row-level spatial refinement
-    query match {
-      case ByExtent(e, pad) =>
-        df = SpatialFilters.filterByExtent(df, pad2(e, pad), x, y)
-      case ByCountry(n, pad) =>
-        df = SpatialFilters.filterByExtent(df, NamedExtents.country(n, pad), x, y)
-      case ByContinent(n, pad) =>
-        df = SpatialFilters.filterByExtent(df, NamedExtents.continent(n, pad), x, y)
-      case AroundPoint(lon, lat, d, _) if !d.isNaN =>
-        df = SpatialFilters.filterAroundPoint(spark, df, lon, lat, d, x, y)
-      case AroundPoint(lon, lat, _, s) if !s.isNaN =>
-        df = SpatialFilters.filterByExtent(df, GeoExtent.aroundPoint(lon, lat, sizeDeg = s), x, y)
-      case ByPolygon(vs, _) =>
-        df = SpatialFilters.filterByPolygon(df, vs, x, y)
-      case _ => ()
-    }
+    df = refine(df)
 
     // user predicates (P3) then projection (P1) then limit (P2)
     filters.foreach { f => df = df.where(f) }
@@ -156,6 +124,28 @@ object BucketReader {
       df = df.limit(nRows.toInt)
     }
     df
+  }
+
+  /** Parquet scan of selected directories (or files) with the label
+    * columns. Hive labels are partition columns, discovered under
+    * `basePath`. Directory-flavor cells have no `level=` names to discover,
+    * so the scan looks up files recursively and the labels are rebuilt
+    * from the path segments. pathGlobFilter keeps non-parquet files (e.g.
+    * the reference's bucket_info.yaml) out of a directory scan. */
+  private def scan(rs: SparkSession, p: Partitioning2D, bucketDir: String,
+                   paths: Seq[String], files: Boolean): DataFrame = {
+    val directory = p.flavor.contains("directory")
+    val r = if (directory) rs.read.option("recursiveFileLookup", "true")
+            else rs.read.option("basePath", bucketDir)
+    val d = (if (files) r else r.option("pathGlobFilter", "*.parquet")).parquet(paths: _*)
+    if (!directory) d
+    else {
+      val parts = split(input_file_name(), "/")
+      val n = p.order.length
+      p.order.zipWithIndex.foldLeft(d) { case (acc, (level, i)) =>
+        acc.withColumn(level, element_at(parts, -(n - i + 1)))
+      }
+    }
   }
 
   /** Recursive file listing with extension / glob / regex basename filters
@@ -181,9 +171,28 @@ object BucketReader {
         matcher.forall(_.matches(Paths.get(name))) &&
         regex.forall(_.pattern.matcher(name).lookingAt()) // re.match semantics
       }
-      .map(f => if (f.toUri.getScheme == "file") f.toUri.getPath else f.toString)
+      .map(display)
       .toSeq.sorted
   }
+
+  /** The first data file of a depth-first walk, which stops there: a
+    * schema source that never lists the whole bucket. */
+  private def firstFile(root: String, fileExtension: String): Option[String] = {
+    val (fs, rootPath) = BucketFs.resolve(root)
+    def walk(d: Path): Option[Path] = {
+      val (dirs, files) = fs.listStatus(d).filter { st =>
+        val n = st.getPath.getName
+        !n.startsWith("_") && !n.startsWith(".")
+      }.partition(_.isDirectory)
+      files.map(_.getPath).find(_.getName.endsWith(fileExtension))
+        .orElse(dirs.iterator.flatMap(st => walk(st.getPath)).nextOption())
+    }
+    walk(rootPath).map(display)
+  }
+
+  /** Local paths as plain paths, remote ones as full URIs. */
+  private def display(f: Path): String =
+    if (f.toUri.getScheme == "file") f.toUri.getPath else f.toString
 
   /** Filepaths grouped by partition (reference get_filepaths_by_partition,
     * satbucket/io.py:110-126): keys are the last n-level relative partition

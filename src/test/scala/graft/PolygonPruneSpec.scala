@@ -3,6 +3,7 @@ package graft
 import org.scalatest.funsuite.AnyFunSuite
 import graft.functions.Polygon
 import graft.partitioning.{Extent, LonLatPartitioning}
+import graft.sources.{BucketReader, BucketWriter}
 
 /** Per-cell polygon pruning: rectangle/polygon intersection geometry and
   * the cell-set reduction vs bounding-box pruning. */
@@ -64,20 +65,42 @@ class PolygonPruneSpec extends AnyFunSuite {
     }
   }
 
-  test("exact-cell predicate selects cells, not their cross product") {
+  test("exact cell selection: an L-shaped cell set lists and scans 3 cells, not 4") {
     val spark = SparkTestBase.spark
     import spark.implicits._
-    val p = LonLatPartitioning(size = (10, 10))
-    // L-shape cells: (0,0), (1,0), (0,1) — cross-product pruning would
-    // also admit (1,1)
-    val cells = Seq((0, 0), (1, 0), (0, 1))
-    val labels = Seq((0, 0), (1, 0), (0, 1), (1, 1)).map { case (i, j) =>
-      val Seq(xl, yl) = p.labelsOfIndices(i, j)
-      (xl, yl)
+    // rows in the four cells (0..20)² of a 10° grid; the L-shaped polygon
+    // touches three of them, and the cross product of its x and y cells
+    // would also admit the fourth, (10..20)²
+    val rows = for {
+      (lon, lat) <- Seq((5.0, 5.0), (15.0, 5.0), (5.0, 15.0), (15.0, 15.0))
+      k <- 0 until 4
+    } yield (lon + k * 0.5, lat + k * 0.5)
+    val lShape = Seq((1.0, 1.0), (19.0, 1.0), (19.0, 9.0), (9.0, 9.0), (9.0, 19.0), (1.0, 19.0))
+    Seq(None, Some("directory")).foreach { flavor =>
+      val dir = java.nio.file.Files.createTempDirectory("graft_lshape").toString
+      val p = LonLatPartitioning(size = (10, 10), flavor = flavor)
+      BucketWriter.writeBucket(rows.toDF("lon", "lat"), dir, p, mode = "overwrite")
+      val df = BucketReader.read(spark, dir, BucketReader.ByPolygon(lShape))
+
+      val cells = Seq((18, 9), (19, 9), (18, 10)) // (i, j) of (0..10)², (10..20)×(0..10), (0..10)×(10..20)
+      assert(p.partitionIndicesByPolygon(lShape).toSet == cells.toSet)
+      val listed = df.inputFiles.map(f => new org.apache.hadoop.fs.Path(f).getParent.toUri.getPath).toSet
+      val want = p.directoriesForCells(cells).map(rel =>
+        new org.apache.hadoop.fs.Path(s"$dir/$rel").toUri.getPath).toSet
+      assert(listed == want, s"$flavor")
+
+      val read = df.select("lon", "lat")
+      val got = read.collect().map(r => (r.getDouble(0), r.getDouble(1)))
+      assert(ScanStats.numFiles(read) == df.inputFiles.length, s"$flavor")
+      assert(got.toSet == rows.filter { case (x, y) => x < 10 || y < 10 }.toSet, s"$flavor")
     }
-    val df = labels.toDF(p.levels(0), p.levels(1))
-    val kept = df.where(p.prunePredicateForCells(cells))
-      .collect().map(r => (r.getString(0), r.getString(1))).toSet
-    assert(kept == labels.take(3).toSet)
   }
+}
+
+/** Files the parquet scans of an executed DataFrame read. */
+object ScanStats extends org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper {
+  def numFiles(df: org.apache.spark.sql.DataFrame): Long =
+    collect(df.queryExecution.executedPlan) {
+      case s: org.apache.spark.sql.execution.FileSourceScanExec => s.metrics("numFiles").value
+    }.sum
 }
